@@ -538,7 +538,7 @@ object DedupStages {
     *    materialized through `ckpt` (row-block localCheckpoint), NOT
     *    `.persist()`: the columnar in-memory cache is pathological for
     *    string id frames — measured on the 1.1M-pair geo_cluster list
-    *    (CcStepProbe `store`), cache BUILD 33.8 task-s and every
+    *    (OPTIMIZATION_r19.md), cache BUILD 33.8 task-s and every
     *    decoding read ~17 task-s, vs 1.1 / 0.5 task-s for the same
     *    frame as localCheckpoint row blocks (~30x: the cache pays
     *    per-batch compression-scheme trials on build and per-read
@@ -548,7 +548,7 @@ object DedupStages {
     *    a fixed-width type plans as a map-side-partial HashAggregate,
     *    while `min(string)` plans as a SortAggregate that fully sorts
     *    the EDGE-sized join output twice per round (measured 2.3×
-    *    per-round cost on a 1.1M-pair graph, CcPlanProbe). Component
+    *    per-round cost on a 1.1M-pair graph, OPTIMIZATION_r19.md). Component
     *    SETS are independent of the label order; the declared
     *    min-STRING-id labels are restored by one NODE-sized relabel
     *    pass at the end. Surrogates come from the keyedByTid recipe
@@ -558,7 +558,7 @@ object DedupStages {
     *    exceeds the per-round win and the loop runs directly on the
     *    string ids, as before. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-      ckpt: DataFrame => DataFrame = _.localCheckpoint(true),
+      ckpt: DataFrame => DataFrame = Stages.localCheckpointer,
       surrogateThreshold: Long = 100000L,
       localFinishEdges: Long = 200000L): DataFrame = {
     // the pair count rides the checkpoint job (r19, Stages.ckptObserve)
@@ -623,19 +623,23 @@ object DedupStages {
     }
   }
 
-  /** The pointer-jumping loop of [[connectedComponents]] — label type
-    * agnostic (string ids or long surrogates; `<`/`least`/`min` follow
-    * the column type). localCheckpoint (eager) each round truncates the
-    * LOGICAL lineage to a LogicalRDD — the self-join below would
-    * otherwise double the plan tree twice per round (4^rounds nodes:
-    * planner/explain OOM long before the data is big). Checkpoint
-    * blocks are freed by the ContextCleaner once unreferenced, so
-    * rounds don't accumulate. `hop` is lazily persisted instead of
-    * eagerly checkpointed (r19): it is read twice inside `next`'s plan
-    * (base + the comp→comp mapping), so the cache shares the heavy
-    * neighbour-min aggregation without paying a separate
-    * materialization job per round; `next`'s checkpoint is the round's
-    * one job, the convergence probe rides the cached result. */
+  /** The connected-components fixpoint of [[connectedComponents]] —
+    * label type agnostic (string ids or long surrogates; `<`/`least`/
+    * `min` follow the column type): one star-contraction pass, then
+    * pointer-jumping rounds ([[ccLoopRounds]]) over the contracted
+    * edges. Every intermediate is an eager checkpoint (`ckpt`), which
+    * truncates the LOGICAL lineage to a LogicalRDD — the self-joins
+    * would otherwise double the plan tree twice per round (4^rounds
+    * nodes: planner/explain OOM long before the data is big). Checkpoint
+    * blocks are freed by the ContextCleaner once unreferenced, so rounds
+    * don't accumulate.
+    *
+    * `localFinishEdges` bounds the driver union–find finish, checked
+    * after contraction AND at every round: as soon as the unconverged
+    * remainder (the contracted edges, then each round's cross-label
+    * edge bound) fits under it, the rest runs on the driver
+    * ([[localFinish]]). The driver never collects more than that many
+    * rows; 0 forces the distributed rounds to the fixpoint. */
   private def ccLoop(sym: DataFrame, maxIter: Int,
       ckpt: DataFrame => DataFrame,
       localFinishEdges: Long = 200000L): DataFrame = {
@@ -653,9 +657,9 @@ object DedupStages {
     // 1.1M-pair clique grid leaves ZERO contracted edges, so the loop
     // sees an empty frame and converges in one cheap round instead of
     // ~5 edge-sized join+aggregate rounds (measured ~7 task-seconds
-    // per round, CcStepProbe). Sparse graphs lose nothing: the pass
-    // strictly merges stars and the contracted set never exceeds the
-    // deduped input, and the pointer-jumping round count only drops
+    // per round, OPTIMIZATION_r19.md). Sparse graphs lose nothing: the
+    // pass strictly merges stars and the contracted set never exceeds
+    // the deduped input, and the pointer-jumping round count only drops
     // (the deep-chain spec still converges within the same maxIter).
     val m = ckpt(sym.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
       .select(col("src").as("id"), least(col("src"), col("__mn")).as("__t")))
@@ -672,9 +676,9 @@ object DedupStages {
     // dominant CC input here — leave ZERO contracted edges, and every
     // remaining job below (labels2 ckpt, a pointer-jumping round, its
     // probe, the compose join) would run over empty frames. comp(v) is
-    // exactly m(v) then; one bounded count over the checkpointed e2
-    // (row blocks — the count doubles as the local-finish gate)
-    // replaces ~6 empty-frame driver round-trips.
+    // exactly m(v) then; the contraction checkpoint's count (which
+    // doubles as the local-finish gate) replaces ~6 empty-frame driver
+    // round-trips.
     val nE2 = e2N.getLong(0)
     if (nE2 == 0L)
       m.select(col("id"), col("__t").as("comp"))
@@ -686,36 +690,16 @@ object DedupStages {
       // stages whose latency never shrinks with cluster size. When the
       // remainder fits a bounded driver union–find (cap × 2 ids — a few
       // MB; same runtime-adaptive small-side move AQE makes for
-      // broadcast joins), finish it centrally and broadcast the label
-      // map back; a larger remainder takes the distributed rounds
-      // unchanged, so scale posture is untouched. Labels are identical:
-      // union-by-min-root makes every root the component MIN under the
-      // SAME ordering the distributed `least`/`min` aggregates use
-      // (unsigned UTF-8 bytes for strings, numeric otherwise).
-      val srcType = e2.schema("src").dataType
-      import org.apache.spark.sql.types._
-      val localLt: Option[(Any, Any) => Boolean] = srcType match {
-        case StringType => Some((a, b) => java.util.Arrays.compareUnsigned(
-          a.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          b.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0)
-        case LongType | IntegerType | ShortType | ByteType =>
-          Some((a, b) => a.asInstanceOf[Number].longValue < b.asInstanceOf[Number].longValue)
-        case _ => None // exotic label type: distributed rounds only
-      }
+      // broadcast joins), finish it centrally; a larger remainder takes
+      // the distributed rounds, which re-check the same cap every round.
+      val lt = labelOrder(e2.schema("src").dataType)
       val comps2 =
-        if (nE2 <= localFinishEdges && localLt.isDefined) {
-          val labels = localComponents(e2.collect(), localLt.get)
-          val schema = StructType(Seq(
-            StructField("id", srcType), StructField("comp", srcType)))
-          val rows = new java.util.ArrayList[org.apache.spark.sql.Row](labels.length)
-          labels.foreach { case (i, c) =>
-            rows.add(org.apache.spark.sql.Row(i, c)) }
-          e2.sparkSession.createDataFrame(rows, schema)
-        } else
+        if (nE2 <= localFinishEdges && lt.isDefined) localFinish(e2, lt.get)
+        else
           ccLoopRounds(e2,
             e2.select(col("src").as("id")).distinct()
               .select(col("id"), col("id").as("comp")),
-            maxIter, ckpt)
+            maxIter, ckpt, localFinishEdges, lt)
       // compose: comp(v) = comp'(m(v)); a contracted star with no
       // surviving edge keeps its own min label m(v)
       ckpt(m.join(comps2.select(col("id").as("__t"), col("comp")), Seq("__t"), "left")
@@ -723,11 +707,41 @@ object DedupStages {
     }
   }
 
-  /** Driver union–find over a SMALL contracted edge remainder (the
-    * [[ccLoop]] local-finish gate): union-by-min-root with path
-    * compression — every root IS its component's minimum label, so the
-    * emitted (id, comp) pairs equal the distributed pointer-jumping
-    * fixpoint exactly. Bounded by the caller's edge cap; deterministic
+  /** The driver union–find's label order — the SAME ordering the
+    * distributed `least`/`min` aggregates use (unsigned UTF-8 bytes for
+    * strings, numeric otherwise), so union-by-min-root reproduces their
+    * labels exactly. None for an exotic label type: distributed rounds
+    * only. */
+  private def labelOrder(t: org.apache.spark.sql.types.DataType)
+      : Option[(Any, Any) => Boolean] = {
+    import org.apache.spark.sql.types._
+    t match {
+      case StringType => Some((a, b) => java.util.Arrays.compareUnsigned(
+        a.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        b.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0)
+      case LongType | IntegerType | ShortType | ByteType =>
+        Some((a, b) => a.asInstanceOf[Number].longValue < b.asInstanceOf[Number].longValue)
+      case _ => None
+    }
+  }
+
+  /** Collect a SMALL `(src, dst)` edge list (the caller bounds its
+    * size) and return its min-label components as a local `(id, comp)`
+    * frame. */
+  private def localFinish(edges: DataFrame, lt: (Any, Any) => Boolean): DataFrame = {
+    import org.apache.spark.sql.types._
+    val t = edges.schema.head.dataType
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    localComponents(edges.collect(), lt).foreach { case (i, c) =>
+      rows.add(org.apache.spark.sql.Row(i, c)) }
+    edges.sparkSession.createDataFrame(rows,
+      StructType(Seq(StructField("id", t), StructField("comp", t))))
+  }
+
+  /** Driver union–find over a SMALL edge list ([[localFinish]]):
+    * union-by-min-root with path compression — every root IS its
+    * component's minimum label, so the emitted (id, comp) pairs equal
+    * the distributed pointer-jumping fixpoint exactly. Deterministic
     * regardless of edge order. */
   private def localComponents(edges: Array[org.apache.spark.sql.Row],
       lt: (Any, Any) => Boolean): Array[(Any, Any)] = {
@@ -756,8 +770,29 @@ object DedupStages {
     out
   }
 
-  /** The raw pointer-jumping rounds of [[ccLoop]], over an already
-    * checkpointed edge list.
+  /** The pointer-jumping rounds of [[ccLoop]], over an already
+    * checkpointed edge list, with the local-finish gate checked every
+    * round.
+    *
+    * Each round's neighbour aggregate also yields the max neighbour
+    * label and the degree, and `hop`'s checkpoint observes
+    * B = Σ deg(v) over vertices with a neighbour labelled other than
+    * comp(v), riding the existing job. The edge list is symmetric, so
+    * every cross-label edge is counted in both directions and B/2
+    * bounds the undirected quotient pairs
+    * {(comp(a), comp(b)) : comp(a) < comp(b)}:
+    *  - B = 0: no edge crosses labels, so the labels are final (the
+    *    minimum of each component always labels itself) and the
+    *    pointer-jump job is skipped;
+    *  - 0 < B/2 ≤ `localFinishEdges` (label type ordered): the distinct
+    *    undirected quotient pairs over the round's INPUT labels (at most
+    *    B/2 rows) finish in the driver union–find and compose onto the
+    *    labels. A label is an id of its own component, so the quotient's
+    *    components are exactly the graph's and union-by-min-root yields
+    *    the same min-id labels. A nonzero B is at least 2 (both ends of
+    *    a cross edge count), so a cap of 0 never fires;
+    *  - otherwise the round completes with the pointer jump
+    *    comp := comp(comp).
     *
     * r19 (optimization round, guide §2.4/§1.2): the rounds run in the
     * committed graph-loop shape — the contracted edge list is pinned
@@ -766,46 +801,60 @@ object DedupStages {
     * job per checkpoint instead of one per exchange: graph_cc spent
     * 2.5 s of driver gaps across 62 ~40 ms jobs at sf0.1, and each job
     * is a barrier whose latency survives at cluster scale), and `hop`
-    * is EAGERLY checkpointed. The earlier CcTuneProbe regression
-    * (AQE-off + lazily persisted hop: the whole-DAG submission computes
-    * hop's heavy upstream twice, concurrently, through a racing cache)
-    * does not apply to an eager materialization — `next` then reads hop
-    * twice as cheap row blocks. */
+    * is EAGERLY checkpointed. The lazily-persisted-hop regression
+    * recorded in OPTIMIZATION_r19.md (AQE-off: the whole-DAG submission
+    * computes hop's heavy upstream twice, concurrently, through a
+    * racing cache) does not apply to an eager materialization — the
+    * pointer jump then reads hop twice as cheap row blocks. */
   private def ccLoopRounds(sym: DataFrame, labels0: DataFrame, maxIter: Int,
-      ckpt: DataFrame => DataFrame): DataFrame = {
-    val (e, parts) = graft.stages.Stages.pinByKey(ckpt, sym, "dst")
-    graft.stages.Stages.withoutAqe(e.sparkSession, parts) {
+      ckpt: DataFrame => DataFrame, localFinishEdges: Long,
+      lt: Option[(Any, Any) => Boolean]): DataFrame = {
+    val (e, parts) = Stages.pinByKey(ckpt, sym, "dst")
+    Stages.withoutAqe(e.sparkSession, parts) {
       var labels = ckpt(labels0)
       var iter = 0
-      var changed = true
-      while (iter < maxIter && changed) {
+      var result: Option[DataFrame] = None
+      while (result.isEmpty && iter < maxIter) {
         // 1-hop: comp := min(comp, min over neighbours of their comp)
-        val nbrMin = e
+        val nbr = e
           .join(labels.select(col("id").as("__nid"), col("comp").as("__ncomp")),
             col("dst") === col("__nid"))
-          .groupBy(col("src").as("id")).agg(min("__ncomp").as("__nbr"))
-        val hop = ckpt(labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"), col("comp").as("__old"),
-            least(col("comp"), coalesce(col("__nbr"), col("comp"))).as("__hop")))
-        // pointer jump: comp := comp(comp) — labels are node ids, so the
-        // hop frame doubles as the id→comp mapping. The convergence
-        // check rides the checkpoint job itself (Stages.ckptObserve) —
-        // no separate probe job per round (r19).
-        val mapping = hop.select(col("id").as("__mid"), col("__hop").as("__mcomp"))
-        val (next, chg) = graft.stages.Stages.ckptObserve(ckpt,
-          hop.join(mapping, col("__hop") === col("__mid"), "left")
-            .select(col("id"), col("__old"),
-              least(col("__hop"), coalesce(col("__mcomp"), col("__hop"))).as("comp")),
-          count(when(col("comp") < col("__old"), 1)).as("__chg"))
-        changed = chg.getLong(0) > 0L
-        labels = next.select("id", "comp")
-        iter += 1
+          .groupBy(col("src").as("id")).agg(min("__ncomp").as("__nbr"),
+            max("__ncomp").as("__nbrMax"), count(lit(1)).as("__deg"))
+        // the bound rides hop's checkpoint job (Stages.ckptObserve)
+        val (hop, bound) = Stages.ckptObserve(ckpt,
+          labels.join(nbr, Seq("id"), "left")
+            .select(col("id"),
+              least(col("comp"), coalesce(col("__nbr"), col("comp"))).as("__hop"),
+              when(col("__nbr") =!= col("comp") || col("__nbrMax") =!= col("comp"),
+                col("__deg")).as("__cross")),
+          coalesce(sum(col("__cross")), lit(0L)).as("__b"))
+        val b = bound.getLong(0)
+        if (b == 0L) result = Some(labels)
+        else if (b / 2 <= localFinishEdges && lt.isDefined) {
+          val quotient = e
+            .join(labels.select(col("id").as("src"), col("comp").as("__cs")), Seq("src"))
+            .join(labels.select(col("id").as("dst"), col("comp").as("__cd")), Seq("dst"))
+            .where(col("__cs") < col("__cd"))
+            .select(col("__cs").as("src"), col("__cd").as("dst"))
+            .distinct()
+          val fin = localFinish(quotient, lt.get)
+            .select(col("id").as("__fid"), col("comp").as("__fcomp"))
+          result = Some(labels.join(fin, col("comp") === col("__fid"), "left")
+            .select(col("id"), coalesce(col("__fcomp"), col("comp")).as("comp")))
+        } else {
+          // pointer jump: comp := comp(comp) — labels are node ids, so
+          // the hop frame doubles as the id→comp mapping
+          val mapping = hop.select(col("id").as("__mid"), col("__hop").as("__mcomp"))
+          labels = ckpt(hop.join(mapping, col("__hop") === col("__mid"), "left")
+            .select(col("id"),
+              least(col("__hop"), coalesce(col("__mcomp"), col("__hop"))).as("comp")))
+          iter += 1
+        }
       }
-      if (changed)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIter rounds " +
-          "(labels still changing) — raise maxIter")
-      labels
+      result.getOrElse(throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds " +
+        "(labels still changing) — raise maxIter"))
     }
   }
 

@@ -401,9 +401,11 @@ object GraphStages {
     * SQL-oracle-checkable. Vertices registered by `vertex` stages but
     * touching no edge form singleton components. Options: `label`
     * (optional edge-label filter), `maxIter` (default 20),
-    * `localFinishEdges` (default 200000 — star-contraction remainders
-    * at or under this edge count finish in a driver union–find instead
-    * of distributed rounds; 0 forces the rounds). Output:
+    * `localFinishEdges` (default 200000 — checked after star
+    * contraction and again at every pointer-jumping round: as soon as
+    * the unconverged remainder's edge bound is at or under it, the rest
+    * finishes in a driver union–find that collects at most that many
+    * rows; 0 forces the rounds to the fixpoint). Output:
     * (id, component) — a query stage (replaces the stream).
     *
     * Scale shape: delegates to the dedup family's pointer-jumping CC
@@ -420,7 +422,7 @@ object GraphStages {
       // re-evaluates the upstream once, ExecProbe) — and REVERTED:
       // the cache fill's own plan misbehaves (geo_cluster 11 -> 80+
       // task-SECONDS warm, JobStatsProbe A/B), the same lazy-cache
-      // pathology CcTuneProbe documented for ccLoop. Wall clock hid it
+      // pathology OPTIMIZATION_r19.md records for ccLoop. Wall clock hid it
       // behind idle cores; task time is the metric that counts at
       // scale. The duplicate evaluation is the cheaper shape.
       val edges0 = ctx.edges.getOrElse(

@@ -6,6 +6,7 @@ import graft.sources.Sources
 import graft.spec.ComponentSpec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.sql.types.StructType
 
 /** Row-wise transformer stages (SURVEY.md §2.3).
@@ -54,14 +55,22 @@ object Stages {
     * survive executor loss, at the cost of one distributed write per
     * truncation. Round structure and plan flatness are identical in
     * both modes. The caller owns the directory's lifecycle (Spark
-    * writes per-app subdirectories; clean them with the app). */
+    * writes per-app subdirectories; clean them with the app). Both modes
+    * cap the checkpoint's carried size estimate at `Long.MaxValue`: it
+    * is inherited from the origin plan, and every round's self-join
+    * multiplies it (`CheckpointBridge`). */
   def checkpointerOf(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =
     spec.str("checkpointDir") match {
       case Some(dir) =>
         ctx.spark.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(eager = true)
+        df => CheckpointBridge.capSizeEstimate(df.checkpoint(eager = true))
+      case None => localCheckpointer
     }
+
+  /** [[checkpointerOf]]'s default: eager `localCheckpoint`, size
+    * estimate capped. */
+  val localCheckpointer: DataFrame => DataFrame =
+    df => CheckpointBridge.capSizeEstimate(df.localCheckpoint(eager = true))
 
   /** r19 optimization round: run an iterative loop body with AQE OFF
     * (restored afterwards, exception-safe). AQE turns every `Exchange`

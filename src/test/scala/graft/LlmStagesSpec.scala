@@ -233,6 +233,111 @@ class LlmStagesSpec extends SparkSpec {
     assert(sLocal("pz") == "pa" && sLocal("x2") == "x1" && sLocal("q4") == "q1")
   }
 
+  /** Runs `body` in its own job group and returns its result, the jobs
+    * it launched and the output rows of every driver `collect` it ran.
+    * Both listeners sit on the shared listener-bus queue, which is FIFO:
+    * once a sentinel job is seen, every earlier event has been delivered. */
+  private def tracked[T](body: => T): (T, Int, Seq[Long]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val group = s"cc-tracked-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val collected = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val jobL = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val g = Option(j.properties.getProperty("spark.jobGroup.id")).getOrElse("")
+        if (g == group) jobs.incrementAndGet() else seen.add(g)
+      }
+    }
+    val rowsL = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f == "collect") {
+          val plan = qe.executedPlan match {
+            case a: AdaptiveSparkPlanExec => a.executedPlan
+            case p => p
+          }
+          plan.collectFirst { case p if p.metrics.contains("numOutputRows") =>
+            p.metrics("numOutputRows").value }.foreach(collected.add)
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def flush(tag: String): Unit = {
+      sc.setJobGroup(tag, tag)
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!seen.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(tag), s"listener never saw the $tag sentinel")
+    }
+    sc.addSparkListener(jobL)
+    try {
+      flush(group + "-begin")
+      spark.listenerManager.register(rowsL)
+      sc.setJobGroup(group, group)
+      val out = body
+      flush(group + "-end")
+      (out, jobs.get, collected.toArray.toSeq.map(_.asInstanceOf[Long]))
+    } finally {
+      sc.clearJobGroup()
+      spark.listenerManager.unregister(rowsL)
+      sc.removeSparkListener(jobL)
+    }
+  }
+
+  test("connectedComponents: per-round local finish == forced rounds, fewer jobs, bounded collect") {
+    // shuffled chains: ids along each chain in a seeded random order, so
+    // star contraction leaves a remainder above the cap, while pointer
+    // jumping shrinks the cross-label edges below it within a few rounds
+    val rnd = new scala.util.Random(17)
+    val chains = (0 until 40).map(c => rnd.shuffle((0 until 24).map(i => c * 100L + i)))
+    val cap = 120L
+    def check[K](pairs: org.apache.spark.sql.DataFrame, expected: Map[K, K]): Unit = {
+      def labels(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.get(0).asInstanceOf[K] -> r.get(1).asInstanceOf[K]).toMap
+      val (gated, gatedJobs, rows) = tracked(
+        DedupStages.connectedComponents(pairs, localFinishEdges = cap))
+      val (forced, forcedJobs, _) = tracked(
+        DedupStages.connectedComponents(pairs, localFinishEdges = 0L))
+      val dflt = labels(DedupStages.connectedComponents(pairs))
+      assert(labels(gated) == expected, "per-round gate labels")
+      assert(labels(forced) == expected, "forced-rounds labels")
+      assert(dflt == expected, "default (contraction gate) labels")
+      assert(gatedJobs < forcedJobs, s"gated $gatedJobs jobs vs forced $forcedJobs")
+      assert(rows.nonEmpty, "the per-round gate never collected")
+      assert(rows.forall(_ <= cap), s"driver collected $rows rows, cap $cap")
+    }
+    val longExpected = chains.flatMap(ch => ch.map(_ -> ch.min)).toMap
+    check(chains.flatMap(ch => ch.zip(ch.tail)).toDF("a", "b"), longExpected)
+    def sid(i: Long) = s"n$i"
+    val strExpected = chains.flatMap { ch =>
+      val mn = ch.map(sid).min; ch.map(i => sid(i) -> mn) }.toMap
+    check(chains.flatMap(ch => ch.zip(ch.tail).map { case (a, b) => (sid(a), sid(b)) })
+      .toDF("a", "b"), strExpected)
+  }
+
+  test("connectedComponents: checkpointed output carries a capped size estimate") {
+    // every round's self-join multiplies the carried estimate; the
+    // checkpoints cap it, so a deep chain's labels stay fixed-width
+    val pairs = (0L until 60L).map(i => (i, i + 1)).toDF("a", "b")
+    val comps = DedupStages.connectedComponents(pairs, localFinishEdges = 0L)
+    val bits = comps.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
+    assert(bits <= 64, s"size estimate grew to $bits bits")
+  }
+
+  test("connectedComponents: a maxIter overrun fails loud, gate or no gate") {
+    // the 60-chain needs more than 2 rounds; a cap of 10 stays below its
+    // cross-label bound in both
+    val pairs = (0L until 60L).map(i => (i, i + 1)).toDF("a", "b")
+    for (cap <- Seq(0L, 10L)) {
+      val e = intercept[IllegalStateException](
+        DedupStages.connectedComponents(pairs, maxIter = 2, localFinishEdges = cap))
+      assert(e.getMessage.contains("did not converge in 2 rounds"), e.getMessage)
+    }
+  }
+
   // ----------------------------------------------------------------- simhash
   test("simhash: identical docs distance 0; near docs close; far docs far") {
     val base = (1 to 40).map(i => s"w$i").mkString(" ")

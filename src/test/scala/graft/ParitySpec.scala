@@ -196,9 +196,12 @@ class ParitySpec extends SparkSpec {
 
   test("all three shipped reference configs parse + normalize to known components") {
     val known = Engine.transformers.keySet ++ Set("row", "line")
+    // test resources rebuilt from the documented shapes of the upstream
+    // module's src/main/resources (see reference/PROVENANCE.md)
     for (f <- Seq("config.json", "config-jdbc.json", "config-dbpedia.json")) {
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"/root/reference/src/main/resources/$f")), "UTF-8")
+      val in = getClass.getResourceAsStream(s"/reference/$f")
+      assert(in != null, s"missing test resource reference/$f")
+      val src = try new String(in.readAllBytes(), "UTF-8") finally in.close()
       val spec = graft.spec.PipelineSpec.parse(src)
       spec.transformers.foreach(t =>
         assert(known.contains(t.name), s"$f: unknown transformer ${t.name}"))
