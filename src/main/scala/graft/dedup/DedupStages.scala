@@ -2,7 +2,7 @@ package graft.dedup
 
 import graft.engine.EtlContext
 import graft.spec.ComponentSpec
-import graft.stages.Stages
+import graft.stages.{BucketGuard, Stages}
 import graft.text.TextStages
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -16,11 +16,12 @@ import org.apache.spark.sql.functions._
   *    canonical row) — no join, no window, map-side partial agg;
   *  - MinHash signatures are computed per row with higher-order functions
   *    (zero shuffle), and candidate generation explodes only the B band
-  *    keys per doc and self-joins on the band bucket — O(bucket²) pairs,
-  *    NEVER the all-pairs O(N²);
+  *    keys per doc, groups them by band bucket and streams each bucket's
+  *    pairs (`BucketGuard.bucketPairs`) — O(bucket²) pairs, NEVER the
+  *    all-pairs O(N²);
   *  - SimHash candidates use the pigeonhole band trick (k bit-blocks →
-  *    any pair within Hamming distance < k shares a block) — again a
-  *    bucket equi-join.
+  *    any pair within Hamming distance < k shares a block) — again
+  *    bucket pairs.
   */
 object DedupStages {
 
@@ -138,47 +139,43 @@ object DedupStages {
       // byte-identical hash values to the HOF wordShingles+xxhash64 path
       // (asserted in specs), ~10× cheaper per row
       graft.functions.VectorExpressions.ensure(ctx.spark)
-      // null-text docs carry null signatures whose band keys degenerate
-      // to the band-index hash — every null doc would collide into one
-      // bucket per band (O(K²) candidates). Null text can't be a
-      // near-dup; drop before banding (round-2 advisory).
-      val docs = df.select(col(id).as("__id"),
-          graft.functions.VectorExpressions.shingleHashes(col(field), n).as("__shh"))
-        .where(col("__shh").isNotNull)
+      val docs = df.select(col(id).as("__id"), col(field).as("__text"))
       // native per-row signature (graft.functions.MinHashSig): a pure
       // map-side projection — no explode, NO shuffle before banding
       // (values identical to the explode+MIN-agg form, asserted in specs)
       val sigs = docs.select(col("__id"),
-        graft.functions.VectorExpressions.minhashSig(col("__shh"), numHashes)
-          .as("__sig"))
+        graft.functions.VectorExpressions.minhashSig(
+          graft.functions.VectorExpressions.shingleHashes(col("__text"), n),
+          numHashes).as("__sig"))
 
-      // band keys: hash of each signature slice → explode B rows per doc
+      // band keys: hash of each signature slice → explode B rows per doc.
+      // Null text (null signature) would hash every band to the
+      // band-index hash — one bucket per band for all null docs, O(K²)
+      // candidates — and can't be a near-dup: it gets no band rows. This
+      // is not a Filter on purpose: the optimizer inlines an aliased
+      // column into a pushed-down Filter, so `where(text IS NOT NULL)`
+      // re-runs an upstream projection (normalizetext) for every doc,
+      // and `where(sig IS NOT NULL)` would shingle every doc twice.
       val bandKeys = array((0 until bands).map(bi =>
         xxhash64(lit(bi), slice(col("__sig"), bi * rows + 1, rows))): _*)
-      val banded0 = sigs.select(col("__id"),
-        posexplode(bandKeys).as(Seq("__band", "__bkey")))
-      // skew guard: a degenerate bucket goes O(bucket²) — cap + counter;
-      // spread: the bucket join expands quadratically, so an
-      // under-parallel input (or an AQE byte-coalesced exchange) must
-      // not serialize it on 1-2 tasks (SimilarityStages.spread)
-      val banded = graft.similarity.SimilarityStages.spread(
-        Stages.guardBuckets(banded0, Seq("__band", "__bkey"),
-          spec, ctx, "minhash"), Seq(col("__band"), col("__bkey")))
+      val banded = sigs.select(col("__id"),
+        posexplode(when(col("__sig").isNotNull, bandKeys)).as(Seq("__band", "__bkey")))
+      // candidate pairs: members of a shared (band, bucket), hot buckets
+      // capped + counted (BucketGuard) — O(bucket²) per bucket
+      val cand = BucketGuard.bucketPairs(banded, Seq("__bkey", "__band"),
+          spec, ctx, "minhash")
+        .select(col("__l.__id").as("a"), col("__r.__id").as("b")).distinct()
 
-      // candidate pairs: equi-join on (band, bucket) — O(bucket²)
-      val l = banded.select(col("__band"), col("__bkey"), col("__id").as("a"))
-      val r = banded.select(col("__band"), col("__bkey"), col("__id").as("b"))
-      val cand = l.join(r, Seq("__band", "__bkey")).where(col("a") < col("b"))
-        .select("a", "b").distinct()
-
-      // exact verification on the candidate set only: shingle-hash arrays
-      // are (re)computed for CANDIDATE docs alone (the semi join pushes
-      // below the projection) and intersected as longs — same Jaccard
-      // modulo negligible 64-bit collisions
+      // exact verification on the candidate set only: the candidate ids
+      // semi-join the text FIRST (and below any upstream projection), so
+      // shingle-hash arrays are recomputed for candidate docs alone, and
+      // intersected as longs — same Jaccard modulo negligible 64-bit
+      // collisions
       val candIds = cand.select(col("a").as("__cid"))
         .union(cand.select(col("b").as("__cid"))).distinct()
       val candSh = docs.join(candIds, col("__id") === col("__cid"), "left_semi")
-        .select(col("__id"), col("__shh"))
+        .select(col("__id"),
+          graft.functions.VectorExpressions.shingleHashes(col("__text"), n).as("__shh"))
       cand
         .join(candSh.select(col("__id").as("a"), col("__shh").as("__sha")), Seq("a"))
         .join(candSh.select(col("__id").as("b"), col("__shh").as("__shb")), Seq("b"))
@@ -245,10 +242,10 @@ object DedupStages {
   /** Banded pigeonhole Hamming join over a (__id, __sig) frame: split
     * the 64-bit signature into `maxDist + 1` blocks — a pair within
     * `maxDist` differs in ≤ maxDist blocks, so ≥ 1 block is intact and
-    * every true pair surfaces from the per-block equi-join. Shared by
+    * every true pair surfaces from the per-block buckets. Shared by
     * `simhash` (text) and `hammingpairs` (any precomputed fingerprint,
-    * e.g. mm_phash). Ids + signatures only; bucket-density guard +
-    * spread shield the quadratic bucket join. */
+    * e.g. mm_phash). Ids + signatures only; the bucket pairs come from
+    * [[BucketGuard.bucketPairs]] (hot-bucket cap, one pass). */
   private def bandedHammingJoin(sigs: DataFrame, maxDist: Int,
                                 spec: ComponentSpec, ctx: EtlContext,
                                 guardName: String): DataFrame = {
@@ -256,23 +253,17 @@ object DedupStages {
     val bits = 64 / blocks
     val blockKeys = array((0 until blocks).map(bi =>
       shiftright(col("__sig"), bi * bits).bitwiseAND(lit((1L << bits) - 1))): _*)
-    val banded0 = sigs.select(col("__id"), col("__sig"),
+    val banded = sigs.select(col("__id"), col("__sig"),
       posexplode(blockKeys).as(Seq("__blk", "__bkey")))
-    // skew guard: a degenerate block bucket goes O(bucket²) — cap +
-    // counter; spread for the quadratic join (SimilarityStages.spread)
-    val banded = graft.similarity.SimilarityStages.spread(
-      Stages.guardBuckets(banded0, Seq("__blk", "__bkey"),
-        spec, ctx, guardName), Seq(col("__blk"), col("__bkey")))
-    val l = banded.select(col("__blk"), col("__bkey"),
-      col("__id").as("a"), col("__sig").as("__siga"))
-    val r = banded.select(col("__blk"), col("__bkey"),
-      col("__id").as("b"), col("__sig").as("__sigb"))
-    l.join(r, Seq("__blk", "__bkey")).where(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("__siga").bitwiseXOR(col("__sigb"))).as("hamming"))
-      // filter BEFORE the dedup shuffle: most candidates fail the
-      // distance test and must not pay the distinct's exchange
-      .where(col("hamming") <= maxDist)
+    // the distance test runs in the pair stream, BEFORE the dedup
+    // shuffle: most candidates fail it and must not pay the distinct's
+    // exchange
+    def dist(l: Column, r: Column): Column =
+      bit_count(l("__sig").bitwiseXOR(r("__sig")))
+    BucketGuard.bucketPairs(banded, Seq("__bkey", "__blk"), spec, ctx, guardName,
+        (l, r) => dist(l, r) <= maxDist)
+      .select(col("__l.__id").as("a"), col("__r.__id").as("b"),
+        dist(col("__l"), col("__r")).as("hamming"))
       .distinct()
   }
 

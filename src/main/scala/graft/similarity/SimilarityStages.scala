@@ -2,7 +2,7 @@ package graft.similarity
 
 import graft.engine.EtlContext
 import graft.spec.ComponentSpec
-import graft.stages.Stages
+import graft.stages.{BucketGuard, Stages}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -43,7 +43,7 @@ object SimilarityStages {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Spread an under-parallel frame across the cluster before a
-    * compute-heavy expansion (N×Q scoring, bucket self-join). Two cases
+    * compute-heavy expansion (N×Q scoring, bucket pairs). Two cases
     * this guards:
     *  - a base small enough to sit in one file runs its whole expansion
     *    on ONE task (the scan's partitioning is inherited);
@@ -52,7 +52,7 @@ object SimilarityStages {
     *    exchange are the wrong signal for compute after it. An explicit
     *    keyed repartition is exempt from AQE coalescing.
     *
-    * KEYED inputs (the bucket joins) repartition UNCONDITIONALLY: the
+    * KEYED inputs (the LSH band buckets) repartition UNCONDITIONALLY: the
     * banded stream is ids-only (3 longs/row), so the exchange is cheap
     * at any scale, and probing the runtime partition count via
     * `df.rdd` would EXECUTE every upstream AQE stage at plan-build time
@@ -346,24 +346,22 @@ object SimilarityStages {
       val sigs = df.select(col(id).as("__id"), col(vec).as("__v"))
         .withColumn("__sig", srpSignature(col("__v"), nBits, spec.int("dim", 64)))
         .withColumn("__n", norm(col("__v")))
-      // the bucket join carries IDs ONLY — attaching the vectors here
-      // would ship 2·dim doubles through the quadratic join per
+      // the bucket pairs carry IDs ONLY — attaching the vectors here
+      // would ship 2·dim doubles through the quadratic expansion per
       // candidate and score the same pair once per shared band; instead
       // the distinct (q_id, n_id) pairs are scored ONCE after re-joining
       // the (linear-sized) vector table (same shape as minhash's
       // candidate verification)
-      val banded0 = sigs.select(col("__id"),
+      val banded = sigs.select(col("__id"),
         posexplode(array((0 until bands).map(bi =>
           shiftright(col("__sig"), bi * bits)
             .bitwiseAND(lit((1L << bits) - 1))): _*)).as(Seq("__blk", "__bkey")))
-      // skew guard: a degenerate bucket goes O(bucket²) — cap + counter
-      val banded = spread(Stages.guardBuckets(banded0, Seq("__blk", "__bkey"),
-        spec, ctx, "similaritylsh"), Seq(col("__blk"), col("__bkey")))
-      val l = banded.select(col("__blk"), col("__bkey"), col("__id").as("q_id"))
-      val r = banded.select(col("__blk"), col("__bkey"), col("__id").as("n_id"))
-      val pairs = l.join(r, Seq("__blk", "__bkey"))
-        .where(col("q_id") =!= col("n_id"))
-        .select("q_id", "n_id").distinct()
+      // candidate pairs a < b, hot buckets capped + counted
+      // (BucketGuard); every pair is a neighbour candidate both ways
+      val half = BucketGuard.bucketPairs(banded, Seq("__bkey", "__blk"),
+          spec, ctx, "similaritylsh")
+        .select(col("__l.__id").as("q_id"), col("__r.__id").as("n_id")).distinct()
+      val pairs = half.union(half.select(col("n_id").as("q_id"), col("q_id").as("n_id")))
       val vecs = sigs.select(col("__id"), col("__v"), col("__n"))
       val cand = pairs
         .join(vecs.select(col("__id").as("q_id"), col("__v").as("__qv"),
@@ -695,21 +693,17 @@ object SimilarityStages {
         val sigs = df.select(col(id).as("__id"), col(vec).as("__v"))
           .withColumn("__sig", srpSignature(col("__v"), nBits, spec.int("dim", 64)))
           .withColumn("__n", norm(col("__v")))
-        // ids-only bucket join + distinct pairs BEFORE scoring (see
-        // similaritylsh): the quadratic exchange carries 3 longs per
-        // candidate instead of 2·dim doubles, and a pair sharing
-        // several bands is scored once, not once per band
-        val banded0 = sigs.select(col("__id"),
+        // ids-only bucket pairs + distinct BEFORE scoring (see
+        // similaritylsh): the pair stream carries ids instead of 2·dim
+        // doubles, and a pair sharing several bands is scored once, not
+        // once per band; hot buckets capped + counted (BucketGuard)
+        val banded = sigs.select(col("__id"),
           posexplode(array((0 until bands).map(bi =>
             shiftright(col("__sig"), bi * bits)
               .bitwiseAND(lit((1L << bits) - 1))): _*)).as(Seq("__blk", "__bkey")))
-        // skew guard: a degenerate bucket goes O(bucket²) — cap + counter
-        val banded = spread(Stages.guardBuckets(banded0, Seq("__blk", "__bkey"),
-          spec, ctx, "cosinedup"), Seq(col("__blk"), col("__bkey")))
-        val l = banded.select(col("__blk"), col("__bkey"), col("__id").as("a"))
-        val r = banded.select(col("__blk"), col("__bkey"), col("__id").as("b"))
-        val pairs = l.join(r, Seq("__blk", "__bkey")).where(col("a") < col("b"))
-          .select("a", "b").distinct()
+        val pairs = BucketGuard.bucketPairs(banded, Seq("__bkey", "__blk"),
+            spec, ctx, "cosinedup")
+          .select(col("__l.__id").as("a"), col("__r.__id").as("b")).distinct()
         val vecs = sigs.select(col("__id"), col("__v"), col("__n"))
         pairs
           .join(vecs.select(col("__id").as("a"), col("__v").as("__av"),

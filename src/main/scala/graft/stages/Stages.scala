@@ -150,14 +150,6 @@ object Stages {
     (ckpt(ckpted.repartition(parts, col(key)).sortWithinPartitions(key)), parts)
   }
 
-  /** LSH band-bucket skew guard (see [[BucketGuard]]): reads the stage's
-    * `maxBucket` option (default [[BucketGuard.DefaultMaxBucket]];
-    * `0`/negative disables). */
-  def guardBuckets(banded: DataFrame, keys: Seq[String], spec: ComponentSpec,
-                   ctx: EtlContext, stage: String): DataFrame =
-    BucketGuard.capBuckets(banded, keys,
-      spec.int("maxBucket", BucketGuard.DefaultMaxBucket), ctx, stage)
-
   /** `field` (OFieldTransformer.java:64-110): set a field from a dialect
     * expression or literal, or remove it. */
   def field(spec: ComponentSpec, ctx: EtlContext): DataFrame => DataFrame =

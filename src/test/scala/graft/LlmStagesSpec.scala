@@ -3,6 +3,7 @@ package graft
 import graft.dedup.DedupStages
 import graft.similarity.SimilarityStages
 import graft.spec.ComponentSpec
+import graft.stages.BucketGuard
 import graft.text.TextStages
 import org.apache.spark.sql.functions._
 
@@ -1636,7 +1637,95 @@ class LlmStagesSpec extends SparkSpec {
     assert(pairs.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
     assert(!pairs.exists(r => r.getLong(0) > 1000L)) // hot cluster dropped
     ctx.drainChecks()
-    assert(ctx.warnings.value > 0) // dropped-bucket counter fired
+    // one hot bucket per band: the 300 share every band
+    assert(ctx.warnings.value == 16, ctx.warnings.value)
+  }
+
+  /** Runs `name` on `df` with maxBucket=100 on a fresh context; returns
+    * the output rows and the hot buckets the guard reported. */
+  private def guarded(name: String, df: org.apache.spark.sql.DataFrame,
+                      opts: (String, Any)*) = {
+    val ctx = newCtx()
+    val out = graft.engine.Engine.transformers(name)(
+      ComponentSpec(name, (opts :+ ("maxBucket" -> 100)).toMap), ctx)(df).collect()
+    ctx.drainChecks()
+    (out, ctx.warnings.value)
+  }
+
+  test("simhash/hammingpairs skew guard: hot block buckets dropped and counted") {
+    val boiler = (1 to 300).map(i =>
+      (1000L + i, "the same boilerplate text repeated on every page of the site"))
+    val doc = (1 to 40).map(i => s"w$i").mkString(" ")
+    val (sim, simHot) = guarded("simhash",
+      (boiler ++ Seq((1L, doc), (2L, doc))).toDF("doc_id", "text"))
+    assert(sim.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
+    assert(!sim.exists(r => r.getLong(0) > 1000L))
+    assert(simHot == 4, simHot) // maxDistance 3 → 4 blocks, one hot each
+    val h = 0x0123456789ABCDEFL
+    val hashes = (1 to 300).map(i => (1000L + i, 0L)) ++ Seq((1L, h), (2L, h ^ 5L))
+    val (ham, hamHot) = guarded("hammingpairs", hashes.toDF("doc_id", "h"),
+      "hashField" -> "h")
+    assert(ham.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
+    assert(hamHot == 4, hamHot)
+  }
+
+  test("cosinedup/similaritylsh skew guard: hot band buckets dropped and counted") {
+    val v = (1 to 64).map(i => math.sin(i.toDouble))
+    // -v flips every SRP bit, so the pair shares no bucket with the cluster
+    val emb = ((1 to 300).map(i => (1000L + i, v)) ++
+      Seq((1L, v.map(-_)), (2L, v.map(-2 * _)))).toDF("vec_id", "embedding")
+    val (dup, dupHot) = guarded("cosinedup", emb)
+    assert(dup.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
+    assert(dupHot == 8, dupHot) // 8 bands by default
+    val (lsh, lshHot) = guarded("similaritylsh", emb, "k" -> 3)
+    assert(lsh.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L), (2L, 1L)))
+    assert(lshHot == 4, lshHot) // 4 bands by default
+  }
+
+  test("bucketPairs == the plain band self-join (dup ids, null texts, any maxBucket)") {
+    graft.functions.VectorExpressions.ensure(spark)
+    val rnd = new scala.util.Random(7)
+    // ids repeat (~300 rows over 220 ids), 5% null texts, a 12-word
+    // vocabulary so the 3-bit block buckets run from 1 to ~50 members
+    val docs = (1 to 300).map { _ =>
+      val text = if (rnd.nextInt(20) == 0) null
+        else Seq.fill(8)("v" + rnd.nextInt(12)).mkString(" ")
+      (1L + rnd.nextInt(220), text)
+    }.toDF("doc_id", "text")
+    val banded = docs.select(col("doc_id").as("__id"),
+        graft.functions.VectorExpressions.simHash64(col("text")).as("__sig"))
+      .select(col("__id"), col("__sig"), posexplode(array((0 until 4).map(bi =>
+        shiftright(col("__sig"), bi * 16).bitwiseAND(lit(7L))): _*)).as(Seq("__blk", "__bkey")))
+    val keys = Seq("__bkey", "__blk")
+    def close(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+      bit_count(a("__sig").bitwiseXOR(b("__sig"))) <= 24
+    // the reference: count guard + anti-join, then the band self-join
+    def reference(maxBucket: Int, filtered: Boolean) = {
+      val live = banded.where(col("__bkey").isNotNull)
+      val kept = if (maxBucket <= 0) live else live.join(
+        live.groupBy(keys.map(col): _*).count().where(col("count") > maxBucket)
+          .select(keys.map(col): _*), keys, "left_anti")
+      val l = kept.select(col("__bkey"), col("__blk"), struct("__id", "__sig").as("l"))
+      val r = kept.select(col("__bkey"), col("__blk"), struct("__id", "__sig").as("r"))
+      l.join(r, keys).where(col("l.__id") < col("r.__id") &&
+          (if (filtered) close(col("l"), col("r")) else lit(true)))
+        .select(col("l.__id"), col("r.__id")).as[(Long, Long)].collect().toSet
+    }
+    val hotRef = banded.where(col("__bkey").isNotNull).groupBy(keys.map(col): _*)
+      .count().where(col("count") > 20).count()
+    assert(hotRef > 0 && hotRef < 32, s"the small cap must drop some buckets: $hotRef")
+    for (maxBucket <- Seq(0, 20, BucketGuard.DefaultMaxBucket); filtered <- Seq(false, true)) {
+      val ctx = newCtx()
+      val got = BucketGuard.bucketPairs(banded, keys,
+          ComponentSpec("t", Map("maxBucket" -> maxBucket)), ctx, "t",
+          (l, r) => if (filtered) close(l, r) else lit(true))
+        .select(col("__l.__id"), col("__r.__id")).as[(Long, Long)].collect()
+      ctx.drainChecks()
+      val want = reference(maxBucket, filtered)
+      assert(got.toSet == want, s"maxBucket=$maxBucket filtered=$filtered")
+      assert(want.nonEmpty)
+      assert(ctx.warnings.value == (if (maxBucket == 20) hotRef else 0L), s"maxBucket=$maxBucket")
+    }
   }
 
   test("minhash skew guard disabled (maxBucket=0) keeps the hot cluster") {

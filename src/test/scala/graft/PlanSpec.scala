@@ -160,6 +160,67 @@ class PlanSpec extends SparkSpec {
       "simhash signature computation must not shuffle")
   }
 
+  /** Every node of the executed (AQE-final) plan, query stages walked
+    * into; a reused exchange is a leaf, so a reused subtree counts once. */
+  private def finalNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    df.collect()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => s +: walk(s.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  private def calls[T: scala.reflect.ClassTag](
+      nodes: Seq[org.apache.spark.sql.execution.SparkPlan]): Int =
+    nodes.map(_.expressions.map(_.collect {
+      case e if scala.reflect.classTag[T].runtimeClass.isInstance(e) => e
+    }.size).sum).sum
+
+  test("banded LSH computes signatures once") {
+    import graft.functions.{MinHashSig, ShingleHashes, SimHash64}
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.CollectMetricsExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import spark.implicits._
+    val ctx = newCtx()
+    // parquet-backed (a Seq frame folds to a LocalRelation at plan time):
+    // a 5-doc identical cluster over maxBucket=3 keeps the hot-bucket
+    // guard in the final plan, plus the fixture's own documents
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh").toString
+    spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+      .union((1 to 5).map(i => (-i.toLong, "one boilerplate line on every page of the site"))
+        .toDF("doc_id", "text"))
+      .write.parquet(s"$dir/docs")
+    val docs = spark.read.parquet(s"$dir/docs")
+    val opts = Map[String, Any]("threshold" -> 0.5, "maxBucket" -> 3)
+    val mh = finalNodes(Engine.transformers("minhash")(
+      graft.spec.ComponentSpec("minhash", opts), ctx)(docs))
+    val plan = mh.head.toString
+    assert(calls[MinHashSig](mh) == 1, s"one signature pass:\n$plan")
+    // the bucket aggregate (with its hot-bucket observation) runs once,
+    // though the verification reads the candidate pairs three times
+    assert(mh.count(_.isInstanceOf[CollectMetricsExec]) == 1, s"one bucket pass:\n$plan")
+    // shingling: once over the full input (under the signature), and
+    // in the verification only above the candidate semi-join
+    val (sigSide, verify) = mh.filter(n => calls[ShingleHashes](Seq(n)) > 0)
+      .partition(n => calls[MinHashSig](Seq(n)) > 0)
+    assert(calls[ShingleHashes](sigSide) == 1, s"one full shingle pass:\n$plan")
+    assert(verify.nonEmpty && verify.forall(_.exists {
+      case j: BaseJoinExec => j.joinType == LeftSemi
+      case _ => false
+    }), s"verification shingles only the candidates:\n$plan")
+    val sh = finalNodes(Engine.transformers("simhash")(
+      graft.spec.ComponentSpec("simhash", opts), ctx)(docs))
+    assert(calls[SimHash64](sh) == 1, s"one simhash pass:\n${sh.head}")
+    ctx.drainChecks()
+    // the cluster alone is one hot bucket per minhash band and simhash block
+    assert(ctx.warnings.value >= 16 + 4, "both guards fired")
+  }
+
   test("bucketed parquet write: agg + self-join on the bucket key, no shuffle") {
     val dir = java.nio.file.Files.createTempDirectory("graft_bucket").toString
     Engine.runJson(newCtx(), s"""{
